@@ -1,7 +1,8 @@
 """Benchmark harness — one JSON line on stdout.
 
-Default: run the headline suite at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default 32):
+Default: run the headline suite at $SPARK_GRAFT_SF_DIR (default: the
+sf0.1 test data set) on local[$SPARK_GRAFT_CPUS] (default: the CPUs in
+this process's affinity set):
   * the frontier crawl job (the north metric: fetched image rows/sec
     through canonicalize → anti-join seen → rank/slots → fetch UDF →
     snapshot append), on the deterministic synthetic world;
@@ -25,9 +26,9 @@ Two modes (SPARK_GRAFT_SCALE_MODE):
             constant on its own cores: the faithful single-machine
             reading of 'N and 4N executors' (a cluster scales by
             adding executor JVMs, and never shares one JVM's write
-            path across them — scaling_probe_r5.json measured that
-            in-JVM contention at 2.7x CPU/row, which threads mode
-            wrongly bills to the engine).
+            path across them — evidence/scaling_probe_r5.json
+            measured that in-JVM contention at 2.7x CPU/row, which
+            threads mode wrongly bills to the engine).
 """
 
 from __future__ import annotations
@@ -240,10 +241,23 @@ def _pin_exec_cluster(n_exec: int, cores_per: int) -> list[int]:
     return pids[:n_exec]
 
 
+AFFINITY = sorted(os.sched_getaffinity(0))
+
+
+def _top_cpu_range(cpus: list[int], n: int) -> str:
+    """The highest contiguous run of up to ``n`` CPUs, as "lo-hi"."""
+    lo = hi = cpus[-1]
+    while hi - lo + 1 < n and lo - 1 in cpus:
+        lo -= 1
+    return f"{lo}-{hi}"
+
+
 # driver/worker-daemon cores in executor-scaling mode — the same 4
 # CPUs at BOTH cluster sizes (a real cluster's driver is a separate
 # node that does not grow with the executor fleet)
-EXEC_DRIVER_CORES = os.environ.get("SPARK_GRAFT_EXEC_DRIVER_CORES", "28-31")
+EXEC_DRIVER_CORES = os.environ.get(
+    "SPARK_GRAFT_EXEC_DRIVER_CORES", _top_cpu_range(AFFINITY, 4)
+)
 
 
 def run_suite(cpus: int, sf_dir: str, frontier_only: bool) -> dict:
@@ -263,6 +277,11 @@ def run_suite(cpus: int, sf_dir: str, frontier_only: bool) -> dict:
         cores_per = int(os.environ.get("SPARK_GRAFT_EXEC_CORES", "2"))
         cpus = n_exec * cores_per
         lo, hi = (int(x) for x in EXEC_DRIVER_CORES.split("-"))
+        if not set(range(lo, hi + 1)) <= set(AFFINITY):
+            sys.exit(
+                f"SPARK_GRAFT_EXEC_DRIVER_CORES={EXEC_DRIVER_CORES} is outside"
+                f" this process's CPU affinity set {AFFINITY}"
+            )
         os.sched_setaffinity(0, set(range(lo, hi + 1)))
         spark = get_spark(
             cores_per,
@@ -300,8 +319,8 @@ def run_suite(cpus: int, sf_dir: str, frontier_only: bool) -> dict:
     # parquet write+read warm-up: the FIRST parquet write of a JVM's
     # life loads the hadoop committer + parquet writer classes —
     # measured ~9-10 s billed to the seed-write phase at EVERY cluster
-    # size (scaling_r5_exec.json: seed-write flat at ~10.5 s on 1 and
-    # 4 executors with only ~1 s of actual data work). A real crawl
+    # size (evidence/scaling_r5_exec.json: seed-write flat at ~10.5 s
+    # on 1 and 4 executors with only ~1 s of actual data work). A real crawl
     # runs hundreds of epochs per long-lived app, so steady-state
     # epochs never pay it; one tiny write moves it out of the metric.
     wtmp = tempfile.mkdtemp(dir=os.environ.get("SPARK_GRAFT_BENCH_STORE_DIR") or None)
@@ -427,7 +446,7 @@ def run_scaling(sf_dir: str, trials: int = 3) -> None:
     single-machine reading of the north rule's 'N and 4N executors'
     (local[N] thread-scaling additionally measures one JVM's internal
     write-path contention, which a multi-JVM cluster never sees:
-    scaling_probe_r5.json)."""
+    evidence/scaling_probe_r5.json)."""
     exec_mode = os.environ.get("SPARK_GRAFT_SCALE_MODE", "threads") == "executors"
     exec_cores = int(os.environ.get("SPARK_GRAFT_EXEC_CORES", "2"))
     default_pair = "1,4" if exec_mode else "2,8"
@@ -617,7 +636,7 @@ def run_scaling(sf_dir: str, trials: int = 3) -> None:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(AFFINITY)))
     if "--scaling" in sys.argv:
         run_scaling(sf_dir)
         return

@@ -9,10 +9,11 @@ Per epoch (SURVEY §3.2 mapping):
   admitted   = F2 column filters → robots gate → F5 anti-join vs visited
   scored     = D5 job_type + F4 priority (pure columns)
   selected   = F3 window rank ≤ F8 per-host slots → global top-K
-  results    = A4 salted fetch UDF  (cached: 5 outputs derive from it)
-  outputs    = visited Δ, images Δ, failed state, frontier Δ (F11 link
-               emit via the closed-form graph), metrics per host_bucket
-  commit     = SnapshotStore.write_epoch (atomic manifest)
+  results    = A4 salted fetch UDF, written once as the fetched payload
+               (visited/images are pruned projections of it)
+  outputs    = failed state, frontier Δ (F11 link emit via the
+               closed-form graph), metrics per host_bucket
+  commit     = SnapshotStore.commit_epoch (atomic manifest)
 
 Counter semantics (candidates/admitted) and per-bucket lineage are
 computed as two dedicated per-host_bucket aggregate jobs over the
@@ -73,11 +74,10 @@ from .operators import admission, fetch as fetch_op, schedule
 from .operators.jobtype import job_type
 from .operators.priority import priority_score
 from .state.bloom import BloomSeenSet
-from .state.snapshots import (
-    METRICS_SCHEMA,
-    PAYLOAD_WRITE_OPTIONS,
-    SnapshotStore,
-)
+from .state.snapshots import METRICS_SCHEMA, SnapshotStore
+
+#: tables every epoch writes — shared by the normal and reseed commits
+EPOCH_TABLES = ["fetched", "failed", "frontier", "metrics"]
 
 
 @dataclass
@@ -222,8 +222,9 @@ def _seen_filter_for_epoch(store, epoch, cfg, est, visited):
     since the persisted epoch (one epoch's rows in steady state) plus
     any new recrawl tombstones as counting deletes — so per-epoch
     filter cost is O(new keys), not the O(|visited|) full scan measured
-    at 7.5 s / 20M keys (bloom_evidence_r4.json); at the 10^9-visited
-    design point the rebuild would be minutes of scan per epoch.
+    at 7.5 s / 20M keys (evidence/bloom_evidence_r4.json); at the
+    10^9-visited design point the rebuild would be minutes of scan per
+    epoch.
 
     Exactness: bloom OR-union IS the insert and inserts commute, so
     incremental == full rebuild bit-identically at equal geometry
@@ -426,35 +427,22 @@ def run_epoch(
     # no 700 MB cache of image bytes, no recomputation of the fetch UDF
     # (at 100 TB the payload never fits in cache; write-once-then-derive
     # is the only plan shape that survives the scale-up).
-    # Payload writer (default arrow, SPARK_GRAFT_PAYLOAD_WRITER=jvm to
-    # revert): the fused path streams each task's batches straight into
-    # a pyarrow ParquetWriter and only a 1-row file manifest returns to
+    # The fused writer streams each task's batches straight into a
+    # pyarrow ParquetWriter and only a 1-row file manifest returns to
     # the JVM — the payload bytes skip the Arrow->JVM->UnsafeRow->JVM-
     # writer hop that the r5 scaling probes measured as the epoch's
-    # widest per-core-efficiency gap (fetch.fetch_write_plan). Measured
-    # +26 % epoch throughput, winning every interleaved pair
-    # (ab_writer_arrow.json); output files and read path identical,
-    # parity pinned in tests/test_fetch_writer.py.
-    if os.environ.get("SPARK_GRAFT_PAYLOAD_WRITER", "arrow") != "jvm":
-        plan = fetch_op.fetch_write_plan(
-            selected,
-            str(store.table_path(epoch, "fetched")),
-            num_partitions=cfg.fetch_partitions,
-            salt_buckets=cfg.salt_buckets,
-        )
-        tp = _tlog("plan", t0)
-        if not plan.collect():  # zero-row epoch: no task wrote a file
-            fetch_op.write_empty_payload(str(store.table_path(epoch, "fetched")))
-    else:
-        results = fetch_op.fetch(
-            selected,
-            num_partitions=cfg.fetch_partitions,
-            salt_buckets=cfg.salt_buckets,
-        )
-        tp = _tlog("plan", t0)
-        store.write_table(
-            epoch, "fetched", results, options=PAYLOAD_WRITE_OPTIONS
-        )
+    # widest per-core-efficiency gap (fetch.fetch_write_plan; +26 %
+    # epoch throughput over the JVM writer,
+    # evidence/ab_writer_arrow.json).
+    dest = str(store.table_path(epoch, "fetched"))
+    plan = fetch_op.fetch_write_plan(
+        selected,
+        dest,
+        num_partitions=cfg.fetch_partitions,
+        salt_buckets=cfg.salt_buckets,
+    )
+    tp = _tlog("plan", t0)
+    fetch_op.write_payload(plan, dest)
     tp = _tlog("fetch+write", tp)
     fetched = store.read_table(epoch, "fetched")
 
@@ -540,19 +528,12 @@ def run_epoch(
         return by_bucket(store.read_table(epoch, "frontier"), "new_frontier").collect()
 
     with ThreadPoolExecutor(max_workers=4) as pool:
-        futs = [
-            pool.submit(store.write_table, epoch, "failed", failed_state, True),
-        ]
-        if os.environ.get("SPARK_GRAFT_MATERIALIZE_VISITED"):
-            futs.append(pool.submit(
-                store.write_table, epoch, "visited",
-                ok.select("url_hash", "url_canon", "host", "status", "depth", "priority"),
-                True,
-            ))
+        failed_fut = pool.submit(
+            store.write_table, epoch, "failed", failed_state, True
+        )
         frontier_fut = pool.submit(write_frontier_and_count)
         lineage_fut = pool.submit(lineage.collect)
-        for f in futs:
-            f.result()
+        failed_fut.result()
         frows = frontier_fut.result()
         lrows = lineage_fut.result()
     tp = _tlog("light-writes+lineage", tp)
@@ -604,18 +585,8 @@ def run_epoch(
         "seen_filter": seen_filter,
         "wall_ms": int((time.time() - t0) * 1000),
     }
-    store.commit_epoch(epoch, _epoch_tables(), stats)
+    store.commit_epoch(epoch, EPOCH_TABLES, stats)
     return stats
-
-
-def _epoch_tables() -> list[str]:
-    """Tables written per epoch — shared by the normal and reseed
-    commit paths so a materialized `visited` partition is never
-    orphaned from the manifest."""
-    tables = ["fetched", "failed", "frontier", "metrics"]
-    if os.environ.get("SPARK_GRAFT_MATERIALIZE_VISITED"):
-        tables.append("visited")
-    return tables
 
 
 # ---------------------------------------------------------------------------
@@ -703,8 +674,8 @@ def run_crawl(
         # advisory chunks, capping the write at |seeds|·100 B / 64 MB
         # tasks no matter how many executors exist (measured 0.35
         # scaling efficiency / 3.5-of-8 busy cores on the 10^6-seed
-        # write, scaling_probe_r5.json). Epoch DELTA writes keep the
-        # rebalance — those are the KB-scale outputs it exists for.
+        # write, evidence/scaling_probe_r5.json). Epoch DELTA writes
+        # keep the rebalance — the KB-scale outputs it exists for.
         store.write_epoch(
             0,
             {"frontier": seeds_to_frontier(seeds)},
@@ -732,7 +703,7 @@ def run_crawl(
             if reseed and not reseeded:
                 reseeded = True
                 store.write_table(epoch, "frontier", seeds_to_frontier(seeds), rebalance=True)
-                store.commit_epoch(epoch, _epoch_tables(), {**stats, "reseeded": True})
+                store.commit_epoch(epoch, EPOCH_TABLES, {**stats, "reseeded": True})
             else:
                 break
         epoch += 1

@@ -145,7 +145,8 @@ def fetch(
 # ---------------------------------------------------------------------------
 # Fused fetch + Python-side parquet write.
 #
-# The scaling attribution chain (BASELINE.md r5, scaling_probe_r5*.json)
+# The scaling attribution chain (BASELINE.md r5,
+# evidence/scaling_probe_r5*.json)
 # measured the payload-parquet WRITE as the widest per-core-efficiency gap
 # in the epoch: the fetch UDF alone scales at the box's DRAM ceiling
 # (0.68-0.88), adding the JVM writer drops it to 0.55-0.64. The JVM path
@@ -158,8 +159,11 @@ def fetch(
 # temp name + atomic os.replace keyed by partition id, so a task retry
 # converges to one complete file (content is deterministic per input
 # split). On a real cluster this requires the store root on shared
-# storage (HDFS/NFS/fuse) — the same contract the JVM writer has; an
-# object-store deployment would swap os.replace for a conditional PUT.
+# storage (HDFS/NFS/fuse) — the same contract Spark's file committer
+# has; an object-store deployment would swap os.replace for a
+# conditional PUT. ``write_payload`` is the driver-side half: it clears
+# the destination, runs the plan, sweeps temps of killed attempts and
+# writes the zero-row fallback.
 
 #: pandas/Arrow column order of a fetch-result batch (mirrors FETCH_SCHEMA)
 FETCH_COLS = [
@@ -168,9 +172,9 @@ FETCH_COLS = [
     "phash", "ua_index", "method",
 ]
 
-#: ~32 MB row groups at the ~5 KB/row payload profile — same target the
-#: JVM writer uses (snapshots.PAYLOAD_WRITE_OPTIONS, measured 14-19 %
-#: faster than 128 MB groups at 8 concurrent writers).
+#: ~32 MB row groups at the ~5 KB/row payload profile: each writer keeps
+#: one group's buffers live, and 32 MB measured 14-19 % faster than the
+#: 128 MB default at 8 concurrent writers (BASELINE.md r5).
 ROWS_PER_GROUP = 6144
 
 
@@ -199,17 +203,8 @@ def fetch_write_plan(
     """Lazy plan that fetches ``selected`` AND writes the payload
     parquet from inside the Python workers (see module comment above).
 
-    Returns the 1-row-per-task file-manifest DataFrame; executing it
-    (``.collect()``) runs the fused fetch+write. The destination
-    directory is cleared eagerly driver-side (same overwrite semantics
-    as ``SnapshotStore.write_table``)."""
-    import shutil
-
-    dest_dir = Path(dest)
-    if dest_dir.exists():
-        shutil.rmtree(dest_dir)
-    dest_dir.mkdir(parents=True, exist_ok=True)
-    dest_s = str(dest_dir)
+    Returns the 1-row-per-task file-manifest DataFrame. Building it
+    touches no file; run it with :func:`write_payload`."""
 
     def write_partition(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import os
@@ -230,17 +225,19 @@ def fetch_write_plan(
                 out[FETCH_COLS], schema=schema, preserve_index=False
             )
             if writer is None:
-                final = os.path.join(dest_s, f"part-{pid:05d}.parquet")
+                final = os.path.join(dest, f"part-{pid:05d}.parquet")
                 # dot-prefixed temp name: Spark's file listing skips
                 # "."/"_" files, so a killed attempt's leftover can
                 # never be picked up as data by a later scan
                 tmp = os.path.join(
-                    dest_s, f".part-{pid:05d}-{attempt}.inprogress"
+                    dest, f".part-{pid:05d}-{attempt}.inprogress"
                 )
                 writer = pq.ParquetWriter(
                     tmp,
                     schema,
-                    compression="none",  # payload bytes are pre-compressed
+                    # image bytes are already compressed: a codec is a
+                    # full encode pass for ~1 % size (BASELINE.md r3)
+                    compression="none",
                     use_dictionary=["host", "fmt", "method"],
                     # min/max stats on prunable columns only — hashing
                     # the image bytes for never-used stats is pure cost
@@ -262,11 +259,30 @@ def fetch_write_plan(
     )
 
 
+def write_payload(plan: DataFrame, dest: str) -> list:
+    """Run a :func:`fetch_write_plan` built for ``dest`` with overwrite
+    semantics: clear the directory right before the action, then, once
+    it has finished, delete temps that killed task attempts left behind
+    and write the zero-row fallback. Returns the file-manifest rows."""
+    import shutil
+
+    dest_dir = Path(dest)
+    if dest_dir.exists():
+        shutil.rmtree(dest_dir)
+    dest_dir.mkdir(parents=True)
+    files = plan.collect()
+    for tmp in dest_dir.glob(".part-*.inprogress"):
+        tmp.unlink()
+    if not files:  # zero-row epoch: no task wrote a file
+        write_empty_payload(dest)
+    return files
+
+
 def write_empty_payload(dest: str) -> None:
     """Driver-side fallback for a zero-row epoch: tasks with no rows
     write no file, but a parquet directory with NO files cannot even
     be schema-inferred by the scan — so materialize one empty
-    schema-carrying file (what the JVM writer's commit does)."""
+    schema-carrying file (what Spark's own parquet commit does)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 

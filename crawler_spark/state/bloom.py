@@ -206,7 +206,8 @@ def anti_join_seen(
     candidate bloom is tiny (built from one pass over the epoch's
     ~10^7 candidate keys at ``cand_fpp``) and cuts that exchange from
     |visited| rows to ~|dups| + fpp·|visited| — measured 206.8 MB →
-    4.3 MB at the 20M-visited evidence scale (bloom_evidence_r4.json).
+    4.3 MB at the 20M-visited evidence scale
+    (evidence/bloom_evidence_r4.json).
 
     Default (``symmetric=None``): engages ONLY when a prebuilt
     ``cand_bloom`` is passed — so an existing caller that passes just

@@ -7,12 +7,14 @@ scheduling epoch appends its deltas as hive-partitioned parquet:
     {root}/{table}/epoch=N/part-*.parquet
     {root}/MANIFEST.json       (atomic tmp+rename)
 
-Tables: ``frontier`` (append-only deltas), ``visited`` (append-only),
-``images`` (append-only), ``failed`` (complete state per epoch),
+Tables: ``frontier`` (append-only deltas), ``fetched`` (append-only
+write-once payload), ``failed`` (complete state per epoch),
 ``metrics`` (append-only, one row per (epoch, host_bucket) —
-per-partition lineage). Resume = read the manifest's latest committed
-epoch and load partitions epoch<=E (partition pruning keeps this a
-metadata operation + pruned scan).
+per-partition lineage), ``recrawl`` (append-only tombstones).
+``visited`` and ``images`` are never written: they are pruned
+projections of ``fetched`` (see ``read_upto``). Resume = read the
+manifest's latest committed epoch and load partitions epoch<=E
+(partition pruning keeps this a metadata operation + pruned scan).
 
 This is the Iceberg-snapshot design from SURVEY §1.3 with a plain
 parquet fallback since the sandbox has no Iceberg runtime jar; the API
@@ -117,7 +119,6 @@ FETCHED_SCHEMA = T.StructType(
 # epoch > T writes a NEW visited row that the tombstone cannot reach.
 RECRAWL_SCHEMA = T.StructType([T.StructField("url_hash", T.LongType())])
 
-TABLES = ("frontier", "visited", "failed", "fetched", "metrics", "recrawl")
 SCHEMAS = {
     "frontier": FRONTIER_SCHEMA,
     "visited": VISITED_SCHEMA,
@@ -130,23 +131,8 @@ SCHEMAS = {
 # tables whose epoch=N dir is the COMPLETE state (not a delta)
 FULL_STATE_TABLES = {"failed"}
 # tables that are pruned projections of the write-once fetched payload
-# (status==200) unless an epoch explicitly committed them
+# (status==200 rows) — no epoch ever writes them
 VIRTUAL_FROM_FETCHED = {"visited", "images"}
-
-# Writer options for the payload table: image bytes are pre-compressed
-# content, so a parquet codec is pure CPU burn (see write_table doc).
-# 32 MB row groups (default 128 MB): each write task keeps one row
-# group's column buffers LIVE in heap, so at executor concurrency the
-# default holds cores x 128 MB of churning buffer — measured 14-19 %
-# slower at 8 writers than 32 MB with no cost at 2 (paired A/B,
-# tools/scaling_probe.py PROBE_PARQUET_OPTS, 800k rows x 2 runs); for
-# a ~5 KB/row binary-payload table 32 MB still gives ~6k rows per
-# group and column pages of the pruned metadata columns stay separate,
-# so scan-side projection pruning is unaffected.
-PAYLOAD_WRITE_OPTIONS = {
-    "compression": "uncompressed",
-    "parquet.block.size": str(32 * 1024 * 1024),
-}
 
 
 class SnapshotStore:
@@ -200,40 +186,23 @@ class SnapshotStore:
         name: str,
         df: DataFrame,
         rebalance: bool = False,
-        options: dict[str, str] | None = None,
     ) -> None:
         """Write one table's epoch partition WITHOUT committing the
-        manifest — the write-once seam: heavy outputs (the fetched
-        payload table) are executed exactly once here, and every
-        downstream derivation re-reads the parquet with column pruning
-        instead of re-running (or caching) the producing job.
+        manifest — the write-once seam: every downstream derivation
+        re-reads the parquet with column pruning instead of re-running
+        (or caching) the producing job.
 
         ``rebalance=True`` inserts an AQE REBALANCE before the write:
         output file count follows data volume (1 file for a KB-scale
         delta, many at TB scale) instead of inheriting the upstream
         task count — writing a 2k-row delta through 32 tiny tasks
-        costs ~1-2 s of pure scheduling per table. Not used for the
-        payload table, whose bytes would pay a full extra shuffle —
-        and not needed when the producing plan already ends in a
-        shuffle: AQE coalesces that shuffle's reads to the advisory
-        size, so the write inherits right-sized partitions for free.
-
-        ``options``: extra parquet writer options. The payload table
-        passes ``compression=uncompressed`` (PAYLOAD_WRITE_OPTIONS):
-        image bytes are already compressed on the wire, so snappy
-        spends a full encode pass for a measured +1.4 % size "win" —
-        the A/B (tools/parquet_codec_ab.py, local[8], 671k rows /
-        3 GB) measured the codec at roughly half the write's CPU with
-        byte-identical reads. At 100 TB the same holds: binary image
-        columns ship uncompressed; only the small string/metadata
-        columns would benefit from a codec, and they are a ~1 % of
-        the bytes."""
+        costs ~1-2 s of pure scheduling per table. Not needed when the
+        producing plan already ends in a shuffle: AQE coalesces that
+        shuffle's reads to the advisory size, so the write inherits
+        right-sized partitions for free."""
         path = self.table_path(epoch, name)
         out = df.hint("rebalance") if rebalance else df
-        w = out.write.mode("overwrite")
-        for k, v in (options or {}).items():
-            w = w.option(k, v)
-        w.parquet(str(path))
+        out.write.mode("overwrite").parquet(str(path))
 
     def read_table(self, epoch: int, name: str) -> DataFrame:
         """Read back one (possibly not-yet-committed) epoch partition."""
@@ -302,12 +271,7 @@ class SnapshotStore:
 
         ``visited`` and ``images`` are VIRTUAL projections of the
         write-once ``fetched`` payload table (status==200 rows, pruned
-        columns — parquet never reads the bytes for visited): an epoch
-        that committed only ``fetched`` contributes through the
-        projection, while epochs that committed a materialized
-        visited/images partition (older-format stores) contribute their
-        own rows — the union keeps mixed-format manifests exact instead
-        of silently dropping the newer epochs.
+        columns — parquet never reads the bytes for visited).
 
         ``visited`` additionally subtracts recrawl tombstones: a
         tombstone committed at epoch T kills visited rows with
@@ -321,32 +285,21 @@ class SnapshotStore:
         if epoch is None:
             epoch = self.latest_epoch()
         manifest = self._read_manifest()
-        own = self._committed_epochs(manifest, table, epoch)
-        if table in FULL_STATE_TABLES:
-            own = own[-1:]
-        parts = []
-        own_df = self._read_epochs(table, own)
-        if own_df is not None:
-            parts.append(own_df)
         if table in VIRTUAL_FROM_FETCHED:
-            have = set(own)
-            f_epochs = [
-                e
-                for e in self._committed_epochs(manifest, "fetched", epoch)
-                if e not in have
-            ]
-            fetched = self._read_epochs("fetched", f_epochs)
-            if fetched is not None:
-                parts.append(
-                    fetched.filter(F.col("status") == 200).select(
-                        *[f.name for f in SCHEMAS[table].fields], "epoch"
-                    )
+            out = self._read_epochs(
+                "fetched", self._committed_epochs(manifest, "fetched", epoch)
+            )
+            if out is not None:
+                out = out.filter(F.col("status") == 200).select(
+                    *[f.name for f in SCHEMAS[table].fields], "epoch"
                 )
-        if not parts:
+        else:
+            own = self._committed_epochs(manifest, table, epoch)
+            if table in FULL_STATE_TABLES:
+                own = own[-1:]
+            out = self._read_epochs(table, own)
+        if out is None:
             return self.spark.createDataFrame([], SCHEMAS[table])
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p, allowMissingColumns=True)
         if table == "visited" and not include_recrawled:
             rc = self._committed_epochs(manifest, "recrawl", epoch)
             if rc:
@@ -392,33 +345,15 @@ class SnapshotStore:
         absorb (one recent epoch in steady state, so the per-epoch
         filter cost is O(new keys), not O(|visited|)). Raw = before
         tombstone subtraction (the filter replays tombstones itself as
-        counting deletes); both the virtual fetched projection and any
-        materialized visited partitions in range contribute."""
+        counting deletes)."""
         manifest = self._read_manifest()
-        own = [
-            e for e in self._committed_epochs(manifest, "visited", upto)
+        fetched = self._read_epochs("fetched", [
+            e for e in self._committed_epochs(manifest, "fetched", upto)
             if e > since
-        ]
-        parts = []
-        own_df = self._read_epochs("visited", own)
-        if own_df is not None:
-            parts.append(own_df.select("url_hash"))
-        f_epochs = [
-            e
-            for e in self._committed_epochs(manifest, "fetched", upto)
-            if e > since and e not in set(own)
-        ]
-        fetched = self._read_epochs("fetched", f_epochs)
-        if fetched is not None:
-            parts.append(
-                fetched.filter(F.col("status") == 200).select("url_hash")
-            )
-        if not parts:
+        ])
+        if fetched is None:
             return None  # nothing in range — caller skips the build job
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return fetched.filter(F.col("status") == 200).select("url_hash")
 
     def save_seen_filter(self, upto: int, kind: str, blob: bytes, meta: dict) -> None:
         """Persist the engaged seen filter's raw bits as a store

@@ -1,23 +1,20 @@
-"""Python-side payload writer parity (SPARK_GRAFT_PAYLOAD_WRITER=arrow).
+"""Python-side payload writer (fetch.fetch_write_plan + write_payload).
 
-The fused fetch+write path (fetch.fetch_write_plan) streams each task's
-batches straight into a pyarrow ParquetWriter instead of returning the
-payload to the JVM for DataFrameWriter.parquet. These tests pin that
-the two writers are interchangeable: identical read-back rows
-(payload bytes included), identical read schema, overwrite semantics,
-and a full crawl whose visited/images/failed state is byte-identical
-either way.
+The fused fetch+write path streams each task's batches straight into a
+pyarrow ParquetWriter instead of returning the payload to the JVM for
+DataFrameWriter.parquet. These tests pin its read-back against the
+plain ``fetch_op.fetch`` result written by Spark (identical rows,
+payload bytes included, and identical read schema), its overwrite and
+temp-file lifecycle, the zero-row fallback, and that the fetch-stage
+task-count knob never changes crawl state.
 """
 
 import os
 
-import pytest
-from pyspark.sql import functions as F
-
 from crawler_spark import fixtures as fx
-from crawler_spark.epoch import EpochConfig, run_crawl
+from crawler_spark.epoch import EpochConfig, run_crawl, run_epoch
 from crawler_spark.operators import fetch as fetch_op
-from crawler_spark.state.snapshots import PAYLOAD_WRITE_OPTIONS, SnapshotStore
+from crawler_spark.state.snapshots import SnapshotStore
 
 
 def _selected(spark, n=600):
@@ -45,15 +42,13 @@ def test_arrow_writer_read_back_identical(spark, tmp_path):
     sel = _selected(spark)
 
     jvm_dir = tmp_path / "jvm"
-    w = fetch_op.fetch(sel, salt_buckets=4).write.mode("overwrite")
-    for k, v in PAYLOAD_WRITE_OPTIONS.items():
-        w = w.option(k, v)
-    w.parquet(str(jvm_dir))
+    fetch_op.fetch(sel, salt_buckets=4).write.parquet(str(jvm_dir))
 
     arrow_dir = tmp_path / "arrow"
-    manifest = fetch_op.fetch_write_plan(
-        sel, str(arrow_dir), salt_buckets=4
-    ).collect()
+    manifest = fetch_op.write_payload(
+        fetch_op.fetch_write_plan(sel, str(arrow_dir), salt_buckets=4),
+        str(arrow_dir),
+    )
     assert sum(r.rows for r in manifest) == sel.count()
     for r in manifest:
         assert os.path.exists(r.file) and r.file.endswith(".parquet")
@@ -74,10 +69,15 @@ def test_arrow_writer_read_back_identical(spark, tmp_path):
 def test_arrow_writer_overwrite(spark, tmp_path):
     sel = _selected(spark, n=150)
     dest = tmp_path / "out"
-    fetch_op.fetch_write_plan(sel, str(dest), salt_buckets=2).collect()
+
+    def run():
+        plan = fetch_op.fetch_write_plan(sel, str(dest), salt_buckets=2)
+        return fetch_op.write_payload(plan, str(dest))
+
+    run()
     first = set(os.listdir(dest))
     # second run overwrites: no stale files, row count stays exact
-    fetch_op.fetch_write_plan(sel, str(dest), salt_buckets=2).collect()
+    run()
     assert set(os.listdir(dest)) <= first
     assert spark.read.parquet(str(dest)).count() == 150
     assert not [f for f in os.listdir(dest) if ".inprogress" in f]
@@ -87,42 +87,58 @@ def test_arrow_writer_overwrite(spark, tmp_path):
     assert spark.read.parquet(str(dest)).count() == 150
 
 
+def test_plan_build_touches_no_files(spark, tmp_path):
+    """Building the plan must not clear the destination: only running
+    it through write_payload does."""
+    dest = tmp_path / "out"
+    dest.mkdir()
+    (dest / "part-00000.parquet").write_bytes(b"previous")
+    fetch_op.fetch_write_plan(_selected(spark, n=50), str(dest), salt_buckets=2)
+    assert os.listdir(dest) == ["part-00000.parquet"]
+    assert (dest / "part-00000.parquet").read_bytes() == b"previous"
+
+
+def test_write_payload_sweeps_killed_attempt_temps(spark, tmp_path):
+    """A temp left by a task attempt that died mid-write during the
+    action is deleted once the action has finished."""
+    dest = tmp_path / "out"
+
+    def leaky(it):
+        for _ in it:
+            (dest / ".part-00000-0.inprogress").write_bytes(b"killed")
+        return iter(())
+
+    plan = _selected(spark, n=20).coalesce(1).mapInPandas(
+        leaky, schema="file string, rows long"
+    )
+    assert fetch_op.write_payload(plan, str(dest)) == []
+    assert os.listdir(dest) == ["part-empty.parquet"]
+
+
+def test_run_epoch_leaves_no_inprogress(spark, tmp_path):
+    seeds = fx.seeds_df(spark, 60, 6)
+    cfg = EpochConfig(num_buckets=4, epoch_seconds=10.0, epoch_budget=100)
+    store = SnapshotStore(spark, tmp_path / "store")
+    run_crawl(spark, store, seeds, cfg, num_epochs=0)
+    dest = store.table_path(1, "fetched")
+    dest.mkdir(parents=True)
+    (dest / ".part-00000-0.inprogress").write_bytes(b"killed")
+    assert run_epoch(spark, store, 1, cfg)["fetched_ok"] > 0
+    assert not [f for f in os.listdir(dest) if ".inprogress" in f]
+
+
 def test_arrow_writer_empty_input(spark, tmp_path):
     """Zero-row epoch: no task writes a file; the driver-side fallback
     materializes a schema-carrying empty parquet so the scan works."""
     dest = tmp_path / "empty"
-    files = fetch_op.fetch_write_plan(
+    plan = fetch_op.fetch_write_plan(
         _selected(spark, n=0), str(dest), salt_buckets=2
-    ).collect()
-    assert files == []
-    fetch_op.write_empty_payload(str(dest))
+    )
+    assert fetch_op.write_payload(plan, str(dest)) == []
     df = spark.read.parquet(str(dest))
     assert df.count() == 0
     assert set(fetch_op.FETCH_COLS) == set(df.columns)
 
-
-def test_crawl_state_identical_across_writers(spark, tmp_path, monkeypatch):
-    """2-epoch crawl, arrow vs jvm writer: every state table identical."""
-    seeds = fx.seeds_df(spark, 120, 10)
-    robots = fx.robots_rules_df(spark, 10)
-    cfg = EpochConfig(num_buckets=8, epoch_seconds=10.0, epoch_budget=300)
-
-    monkeypatch.setenv("SPARK_GRAFT_PAYLOAD_WRITER", "jvm")
-    s_jvm = SnapshotStore(spark, tmp_path / "jvm")
-    run_crawl(spark, s_jvm, seeds, cfg, num_epochs=2, robots_rules=robots)
-
-    monkeypatch.setenv("SPARK_GRAFT_PAYLOAD_WRITER", "arrow")
-    s_arr = SnapshotStore(spark, tmp_path / "arrow")
-    run_crawl(spark, s_arr, seeds, cfg, num_epochs=2, robots_rules=robots)
-
-    def rowset(store, table):
-        return {
-            tuple(bytes(v) if isinstance(v, bytearray) else v for v in r)
-            for r in store.read_upto(table).collect()
-        }
-
-    for table in ("visited", "images", "failed", "metrics", "frontier"):
-        assert rowset(s_jvm, table) == rowset(s_arr, table), table
 
 def test_fetch_partitions_knob_parity(spark, tmp_path):
     """EpochConfig.fetch_partitions changes only the task layout of the

@@ -6,14 +6,14 @@ gives the judge one table — per artifact: pair, per-level medians,
 efficiency, grant ratio, and (round 4+) the data-path efficiency from
 the measured per-phase Amdahl decomposition.
 
-Usage: python tools/scaling_index.py   (writes /root/repo/scaling_history.json)
+Usage: python tools/scaling_index.py   (writes evidence/scaling_history.json)
 """
 from __future__ import annotations
 
 import json
 from pathlib import Path
 
-REPO = Path(__file__).resolve().parent.parent
+EVIDENCE = Path(__file__).resolve().parent.parent / "evidence"
 
 
 def summarize(path: Path) -> dict:
@@ -43,9 +43,9 @@ def summarize(path: Path) -> dict:
 
 
 def main() -> None:
-    arts = sorted(REPO.glob("scaling_r*.json"))
+    arts = sorted(EVIDENCE.glob("scaling_r*.json"))
     hist = [summarize(p) for p in arts if p.name != "scaling_history.json"]
-    (REPO / "scaling_history.json").write_text(
+    (EVIDENCE / "scaling_history.json").write_text(
         json.dumps({"artifacts": hist}, indent=1) + "\n"
     )
     print(json.dumps(hist, indent=1))

@@ -15,18 +15,21 @@ Per epoch (SURVEY §3.2 mapping):
                closed-form graph), metrics per host_bucket
   commit     = SnapshotStore.commit_epoch (atomic manifest)
 
-Counter semantics (candidates/admitted) and per-bucket lineage are
-computed as two dedicated per-host_bucket aggregate jobs over the
-(cheap, columnar) upstream plan — deliberately NOT via ``df.observe``
-or ``persist()``: observe can't produce per-bucket rows, and pinning
-the fetch subtree with persist() measured ~4x worse because the cached
-fragment froze its shuffle plan and AQE could no longer convert the
-visited anti-join into a runtime broadcast inside the fetch job.
-Recomputing the columnar prefix is cheaper than losing that rewrite.
-Resume (F16): the controller
-restarts from ``store.latest_epoch()+1``; an epoch interrupted before
-its manifest commit is invisible and re-runs identically (all inputs
-are functions of committed state + the deterministic world).
+Counters (candidates/admitted) are counted in the one admission pass,
+as the reference's ``CrawlState.stats`` bumps them while it admits
+(crawler.py:335-351): ``df.observe`` on the deduped candidates and on
+admit's output, each one aggregate — an array of per-host_bucket row
+counts — that the fetch job's ``collect()`` fills in passing. Observed
+metrics are accumulator-backed, so a shuffle-map stage re-run after a
+lost executor can over-count them; no engine decision reads them
+(``stats_sum`` reads only ``fetched_ok``). Pinning the fetch subtree
+with persist() instead measured ~4x worse: the cached fragment froze
+its shuffle plan and AQE could no longer convert the visited anti-join
+into a runtime broadcast inside the fetch job. Resume (F16): the
+controller restarts from ``store.latest_epoch()+1``; an epoch
+interrupted before its manifest commit is invisible and re-runs
+identically (all inputs are functions of committed state + the
+deterministic world).
 """
 
 from __future__ import annotations
@@ -65,7 +68,7 @@ def _tlog(label: str, t0: float) -> float:
     return now
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import fixtures as fx
@@ -211,6 +214,31 @@ def emit_links(fetched_ok: DataFrame) -> DataFrame:
     )
 
 
+def _bucket_counts(nb: int):
+    """One aggregate: the array of row counts per host_bucket 0..nb-1."""
+    b = host_bucket(F.col("host"), nb)
+    return F.array(*[F.count_if(b == i) for i in range(nb)]).alias("n")
+
+
+def _observed_buckets(done: DataFrame, name: str, df: DataFrame, nb: int) -> list[int]:
+    """Per-bucket counts of the observe node ``name`` (over ``df``), read
+    from the executed plan of ``done``, the action that ran it. Named
+    observations, not ``pyspark.sql.Observation``: an Observation starts
+    the session's ObservationManager, which is not serializable, and
+    every later task that captures the session (Spark ML's training
+    summaries do) then fails with "Task not serializable".
+
+    A node that is not in the executed plan reports nothing: Catalyst
+    prunes it over a statically empty input, and AQE drops a finished
+    stage, node included, when a later stage comes up empty (an epoch
+    that selects nothing). Then one aggregate job over ``df`` recounts —
+    zeros in the first case, the real counts in the second."""
+    metrics = done._jdf.queryExecution().observedMetrics()
+    if not metrics.contains(name):
+        return list(df.agg(_bucket_counts(nb)).first()["n"])
+    return [int(n) for n in metrics.apply(name).getList(0)]
+
+
 def _seen_filter_for_epoch(store, epoch, cfg, est, visited):
     """Build-or-incrementally-maintain the engaged F5 pre-filter.
 
@@ -346,20 +374,25 @@ def run_epoch(
     """One scheduling epoch = 6 Spark actions (was ~8 in round 1 — the
     per-epoch fixed cost is the scaling-efficiency denominator):
 
-      1. fetch + payload write   (the only execution of the fetch UDF)
+      1. fetch + payload write   (the only execution of the fetch UDF
+         and of admission; its observations carry the per-bucket
+         candidates/admitted counts)
       2. failed-state write      ┐ threaded — planning/commit overlap;
       3. frontier-delta write    │ actions 2-5 run concurrently and
       4. new-frontier collect    │ share wall-clock (4 is a pruned
-      5. lineage collect         ┘ re-scan of 3's output; 5 collects
-         num_buckets rows of per-bucket candidates/admitted/selected/
-         ok/fail — with 4's new_frontier merged driver-side, the full
-         per-partition lineage the north rule asks for)
+      5. lineage collect         ┘ re-scan of 3's output; 5 is the
+         per-bucket selected/ok/fail aggregate of the fetched parquet,
+         merged driver-side with 1's counts and 4's new_frontier — the
+         full per-partition lineage the north rule asks for)
       6. metrics write           (driver-local rows — trivial job)
 
     ``visited`` is never written: it is a pruned VIRTUAL projection of
     the fetched payload table (snapshots.VIRTUAL_FROM_FETCHED), so the
     round-1 visited-delta write job is gone entirely."""
     t0 = time.time()
+    if _TIMING:
+        _TLOG_CPU[:] = [_busy_jiffies()]
+    nb = cfg.num_buckets
     visited = store.read_upto("visited", epoch - 1).select("url_hash")
     failed_prev = store.read_upto("failed", epoch - 1)
     frontier = store.read_upto("frontier", epoch - 1)
@@ -375,7 +408,7 @@ def run_epoch(
         .drop("attempts")
     )
     raw_candidates = fresh.unionByName(retries)
-    candidates = dedup_candidates(raw_candidates)
+    candidates = dedup_candidates(raw_candidates).observe("candidates", _bucket_counts(nb))
 
     bloom = None
     engage = bool(cfg.use_bloom) and cfg.use_bloom != "auto"
@@ -392,7 +425,7 @@ def run_epoch(
         # symmetric visited-side pre-filter (anti_join_seen): one bloom
         # over the epoch's candidate KEY SET, built from the raw
         # (pre-dedup) union — same key set as the deduped candidates,
-        # minus the dedup shuffle — and shared by both admit() calls
+        # minus the dedup shuffle
         cand_bloom = BloomSeenSet.build(
             raw_candidates.select("url_hash"), "url_hash", fpp=0.001
         )
@@ -409,8 +442,8 @@ def run_epoch(
         respect_robots=cfg.respect_robots,
         bloom=bloom,
         cand_bloom=cand_bloom,
-    )
-    admitted = admitted.withColumn(
+    ).observe("admitted", _bucket_counts(nb))
+    scored = admitted.withColumn(
         "job_type", job_type(F.col("url_canon"))
     ).withColumn(
         "priority",
@@ -418,7 +451,7 @@ def run_epoch(
     )
 
     selected = schedule.select_epoch(
-        schedule.with_slots(admitted, robots_rules, cfg.epoch_seconds),
+        schedule.with_slots(scored, robots_rules, cfg.epoch_seconds),
         epoch_budget=cfg.epoch_budget,
     )
 
@@ -458,55 +491,23 @@ def run_epoch(
             F.col("attempt").alias("attempts"), F.col("status").alias("last_status"),
         )
     )
-    # --- per-partition lineage (F15): a per-bucket aggregate job with
-    # all REAL counts. candidates/admitted are counted as
-    # count_distinct(url_hash) over the RAW (pre-dedup) union — exactly
-    # the dedup'd counts, because dedup keeps one row per url_hash and
-    # its min-depth pick passes the admission predicate iff any row
-    # does (depth filter is monotone; host/robots are url-level). This
-    # skips the dedup WINDOW (the expensive full sort) in the lineage
-    # branch: the re-derived plan is pruned scans + one distinct
-    # aggregate (+ the anti-join for admitted), never the fetch UDF.
-    # Persisting candidates/admitted across the two jobs was measured
-    # 4x WORSE here: the cache fragment pins its shuffle plan, so AQE
-    # can no longer broadcast the visited anti-join at runtime inside
-    # the fetch job.
-    def by_bucket(df, name):
-        return df.groupBy(
-            host_bucket(F.col("host"), cfg.num_buckets).alias("host_bucket")
-        ).agg(F.count_distinct(F.col("url_hash")).alias(name))
-
-    adm_raw = admission.admit(
-        raw_candidates,
-        visited,
-        max_depth=cfg.max_depth,
-        host_scope_re=cfg.host_scope_re,
-        robots_rules=robots_rules,
-        respect_robots=cfg.respect_robots,
-        bloom=bloom,
-        cand_bloom=cand_bloom,
-    )
-    lineage = (
-        by_bucket(raw_candidates, "candidates")
-        .join(by_bucket(adm_raw, "admitted"), "host_bucket", "full_outer")
-        .join(
-            fetched.groupBy(
-                host_bucket(F.col("host"), cfg.num_buckets).alias("host_bucket")
-            ).agg(
-                F.count(F.lit(1)).alias("selected"),
-                F.sum((F.col("status") == 200).cast("long")).alias("fetched_ok"),
-                F.sum((F.col("status") != 200).cast("long")).alias("fetched_fail"),
-                # image-dedup lineage: rides this aggregate for free
-                # (phash is a pruned 8-byte column of the parquet the
-                # epoch just wrote); count_distinct skips the NULL it
-                # gets for non-200 rows
-                F.count_distinct(
-                    F.when(F.col("status") == 200, F.col("phash"))
-                ).alias("distinct_phash"),
-            ),
-            "host_bucket",
-            "full_outer",
-        )
+    # --- per-partition lineage (F15): candidates/admitted were counted
+    # by the fetch job's observations (the one admission pass); the
+    # lineage job is the per-bucket aggregate of the just-written parquet
+    cand_counts = _observed_buckets(plan, "candidates", candidates, nb)
+    adm_counts = _observed_buckets(plan, "admitted", admitted, nb)
+    lineage = fetched.groupBy(
+        host_bucket(F.col("host"), nb).alias("host_bucket")
+    ).agg(
+        F.count(F.lit(1)).alias("selected"),
+        F.sum((F.col("status") == 200).cast("long")).alias("fetched_ok"),
+        F.sum((F.col("status") != 200).cast("long")).alias("fetched_fail"),
+        # image-dedup lineage: rides this aggregate for free (phash is a
+        # pruned 8-byte column of the parquet the epoch just wrote);
+        # count_distinct skips the NULL it gets for non-200 rows
+        F.count_distinct(
+            F.when(F.col("status") == 200, F.col("phash"))
+        ).alias("distinct_phash"),
     )
 
     # the three derivations are independent — submit them from threads
@@ -525,7 +526,12 @@ def run_epoch(
         # here re-shuffled the full multi-hundred-MB link delta for
         # an identical file layout.
         store.write_table(epoch, "frontier", emit_links(ok))
-        return by_bucket(store.read_table(epoch, "frontier"), "new_frontier").collect()
+        return (
+            store.read_table(epoch, "frontier")
+            .groupBy(host_bucket(F.col("host"), nb).alias("host_bucket"))
+            .agg(F.count(F.lit(1)).alias("new_frontier"))
+            .collect()
+        )
 
     with ThreadPoolExecutor(max_workers=4) as pool:
         failed_fut = pool.submit(
@@ -538,30 +544,21 @@ def run_epoch(
         lrows = lineage_fut.result()
     tp = _tlog("light-writes+lineage", tp)
 
-    # merge the two per-bucket row sets DRIVER-SIDE — num_buckets dict
-    # entries, not a cluster join
+    # merge the per-bucket counts DRIVER-SIDE — num_buckets dict
+    # entries, not a cluster join; a bucket gets a row when any of its
+    # counts is non-zero (admitted <= candidates)
     merged: dict[int, dict] = {}
-    for r in lrows:
-        merged[r.host_bucket] = {
-            "host_bucket": r.host_bucket,
-            "candidates": r.candidates or 0,
-            "admitted": r.admitted or 0,
-            "selected": r.selected or 0,
-            "fetched_ok": r.fetched_ok or 0,
-            "fetched_fail": r.fetched_fail or 0,
-            "new_frontier": 0,
-            "distinct_phash": r.distinct_phash or 0,
-        }
-    for r in frows:
-        row = merged.setdefault(
-            r.host_bucket,
-            {
-                "host_bucket": r.host_bucket, "candidates": 0, "admitted": 0,
-                "selected": 0, "fetched_ok": 0, "fetched_fail": 0,
-                "new_frontier": 0, "distinct_phash": 0,
-            },
+
+    def bucket_row(b: int) -> dict:
+        return merged.setdefault(
+            b, {**dict.fromkeys(METRICS_SCHEMA.fieldNames(), 0), "host_bucket": b}
         )
-        row["new_frontier"] = r.new_frontier
+
+    for b, (c, a) in enumerate(zip(cand_counts, adm_counts)):
+        if c:
+            bucket_row(b).update(candidates=c, admitted=a)
+    for r in lrows + frows:
+        bucket_row(r.host_bucket).update(r.asDict())
     mrows = sorted(merged.values(), key=lambda d: d["host_bucket"])
     tp = _tlog("metrics-collect", tp)
     store.write_table(

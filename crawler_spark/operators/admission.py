@@ -48,8 +48,8 @@ def admit(
 
     ``cand_bloom``: prebuilt candidate-keys bloom for the symmetric
     visited-side pre-filter (see anti_join_seen) — the epoch builds it
-    ONCE and passes it to both admit() calls (selection + lineage),
-    which see the same key set."""
+    from the raw candidate union, which has the same key set as the
+    deduped candidates it admits."""
     out = candidates.filter(
         F.col("url_canon").isNotNull()
         & (F.col("depth") <= max_depth)

@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from crawler_spark import fixtures as fx
-from crawler_spark.epoch import EpochConfig, run_crawl
+from crawler_spark.epoch import EpochConfig, run_crawl, run_epoch
 from crawler_spark.functions import image as img
 from crawler_spark.operators.jobtype import py_job_type
 from crawler_spark.operators.priority import py_priority_score
@@ -144,6 +144,45 @@ def test_metrics_lineage_nonnull(crawl):
     for s in stats:
         assert s["candidates"] >= s["admitted"] >= s["selected"]
         assert s["admitted"] > 0
+
+
+def test_metrics_lineage_matches_recount(crawl, spark, check_lineage):
+    """Exact-join epochs: the candidates/admitted the fetch job observed
+    equal a count_distinct recount of the raw candidate union."""
+    store, _, _ = crawl
+    robots = fx.robots_rules_df(spark, NUM_HOSTS)
+    for e in range(1, EPOCHS + 1):
+        check_lineage(store, e, 8, robots)
+
+
+def test_empty_epoch_commits_zero_stats(spark, tmp_path):
+    """No committed frontier: the plan is empty before it runs, so the
+    optimizer prunes the observations; the epoch still commits zeros."""
+    store = SnapshotStore(spark, tmp_path / "empty")
+    stats = run_epoch(spark, store, 1, EpochConfig(num_buckets=8))
+    counters = ("candidates", "admitted", "selected", "fetched_ok",
+                "fetched_fail", "dup_images")
+    assert {k: stats[k] for k in counters} == dict.fromkeys(counters, 0)
+    assert store.latest_epoch() == 1
+    assert store.read_upto("metrics").count() == 0
+
+
+def test_epoch_leaves_session_serializable(spark, tmp_path):
+    """run_epoch counts with named observations: a pyspark Observation
+    would start the session's non-serializable ObservationManager, and
+    a later task capturing the session (a Spark ML model's training
+    summary) would fail with "Task not serializable"."""
+    from pyspark.ml.classification import LogisticRegression
+    from pyspark.ml.functions import vector_to_array
+    from pyspark.ml.linalg import Vectors
+
+    run_epoch(spark, SnapshotStore(spark, tmp_path / "s"), 1, EpochConfig(num_buckets=8))
+    df = spark.createDataFrame(
+        [(Vectors.dense([float(i % 3), float(i % 5)]), float(i % 2)) for i in range(40)],
+        ["features", "label"],
+    )
+    model = LogisticRegression(maxIter=3).fit(df)
+    assert len(model.transform(df).select(vector_to_array("probability")[1]).collect()) == 40
 
 
 def test_fetch_method_column(spark):

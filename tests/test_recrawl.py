@@ -108,3 +108,17 @@ def test_seen_filter_choice(recrawled):
     admission anti-join)."""
     store, info, stats, hashes, originals, gone, e, used_filter = recrawled
     assert stats["seen_filter"] == ("cuckoo" if used_filter else None)
+
+
+def test_lineage_matches_recount(recrawled, spark, check_lineage):
+    """The re-fetch epoch (cuckoo-guarded when forced) and the exhausted
+    epoch before the recrawl, which admits nothing: AQE drops the
+    observed stages there, and run_epoch recounts."""
+    store, info, stats, hashes, originals, gone, e, _ = recrawled
+    robots = fx.robots_rules_df(spark, NUM_HOSTS)
+    exhausted = info["epoch"] - 1
+    assert store.read_upto("metrics", exhausted).filter(
+        (F.col("epoch") == exhausted) & (F.col("selected") > 0)
+    ).count() == 0
+    for ep in (exhausted, e):
+        check_lineage(store, ep, CFG["num_buckets"], robots)

@@ -130,3 +130,13 @@ def test_persisted_filter_has_no_false_negatives(crawl_pair, spark):
         dtype=np.int64,
     )
     assert flt.might_contain(seen).all()
+
+
+def test_bloom_epoch_lineage_matches_recount(crawl_pair, spark, check_lineage):
+    """Bloom epochs (full build, then incremental absorb): the observed
+    candidates/admitted equal the exact recount — the seen filter reads
+    the candidates in two union branches, each observing every row."""
+    s_inc, *_ = crawl_pair
+    robots = fx.robots_rules_df(spark, NUM_HOSTS)
+    for e in (1, N_EPOCHS):
+        check_lineage(s_inc, e, CFG["num_buckets"], robots)

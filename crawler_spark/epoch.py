@@ -34,38 +34,7 @@ deterministic world).
 
 from __future__ import annotations
 
-import os
 import time
-
-_TIMING = os.environ.get("SPARK_GRAFT_TIMING") == "1"
-_TLOG_CPU: list[int] = []
-
-
-def _busy_jiffies() -> int:
-    # user+nice+system+irq+softirq of the whole machine (the scaling
-    # harness pins the process tree, so machine jiffies in-window are
-    # this job's); memory-stall cycles count as busy — that is the
-    # point: per-phase achieved-cores separates "slots sat idle"
-    # (parallelism starvation) from "cores were busy but slow"
-    # (bandwidth/contention) in the efficiency decomposition.
-    with open("/proc/stat") as f:
-        p = [int(x) for x in f.readline().split()[1:9]]
-    return p[0] + p[1] + p[2] + p[5] + p[6]
-
-
-def _tlog(label: str, t0: float) -> float:
-    now = time.time()
-    if _TIMING:
-        busy = _busy_jiffies()
-        cores = ""
-        if _TLOG_CPU:
-            dt = now - t0
-            if dt > 0:
-                c = (busy - _TLOG_CPU[0]) / (dt * os.sysconf("SC_CLK_TCK"))
-                cores = f" cores={c:.2f}"
-        _TLOG_CPU[:] = [busy]
-        print(f"    [epoch-timing] {label}: {now - t0:.2f}s{cores}", flush=True)
-    return now
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -109,18 +78,6 @@ class EpochConfig:
     # reference's persistent seen set, crawler.py:167) instead of
     # rebuilding from a full visited scan — see _seen_filter_for_epoch
     persist_seen_filter: bool = True
-    # task count for the fetch stage (None → spark.sql.shuffle.
-    # partitions). The fetch is the epoch's dominant phase and its
-    # tasks are pinned 1:1 to cores when this equals total cores — any
-    # per-task variance then idles a core for the whole tail. On a
-    # multi-executor cluster each executor drains its OWN queue, so
-    # single-digit tasks per executor is the worst case for balance
-    # (BASELINE.md r5 exec-mode attribution: wide runs held 6.3-7.1 of
-    # 8 granted cores). Setting this to ~4x total cores gives each
-    # executor enough tasks to amortize its tail; at 10^10-URL scale
-    # the per-epoch selection is millions of rows, so the extra tasks
-    # cost nothing relative to the balance win.
-    fetch_partitions: int | None = None
 
 
 def seeds_to_frontier(seeds: DataFrame, url_col: str = "url") -> DataFrame:
@@ -390,8 +347,6 @@ def run_epoch(
     the fetched payload table (snapshots.VIRTUAL_FROM_FETCHED), so the
     round-1 visited-delta write job is gone entirely."""
     t0 = time.time()
-    if _TIMING:
-        _TLOG_CPU[:] = [_busy_jiffies()]
     nb = cfg.num_buckets
     visited = store.read_upto("visited", epoch - 1).select("url_hash")
     failed_prev = store.read_upto("failed", epoch - 1)
@@ -471,12 +426,9 @@ def run_epoch(
     plan = fetch_op.fetch_write_plan(
         selected,
         dest,
-        num_partitions=cfg.fetch_partitions,
         salt_buckets=cfg.salt_buckets,
     )
-    tp = _tlog("plan", t0)
     fetch_op.write_payload(plan, dest)
-    tp = _tlog("fetch+write", tp)
     fetched = store.read_table(epoch, "fetched")
 
     ok = fetched.filter(F.col("status") == 200)
@@ -542,7 +494,6 @@ def run_epoch(
         failed_fut.result()
         frows = frontier_fut.result()
         lrows = lineage_fut.result()
-    tp = _tlog("light-writes+lineage", tp)
 
     # merge the per-bucket counts DRIVER-SIDE — num_buckets dict
     # entries, not a cluster join; a bucket gets a row when any of its
@@ -560,11 +511,9 @@ def run_epoch(
     for r in lrows + frows:
         bucket_row(r.host_bucket).update(r.asDict())
     mrows = sorted(merged.values(), key=lambda d: d["host_bucket"])
-    tp = _tlog("metrics-collect", tp)
     store.write_table(
         epoch, "metrics", spark.createDataFrame(mrows, METRICS_SCHEMA)
     )
-    _tlog("metrics-write", tp)
     stats = {
         "epoch": epoch,
         "candidates": int(sum(r["candidates"] for r in mrows)),
@@ -662,9 +611,6 @@ def run_crawl(
     """
     start = store.latest_epoch() + 1
     if start == 0:
-        t0 = time.time()
-        if _TIMING:
-            _TLOG_CPU[:] = [_busy_jiffies()]
         # rebalance=False: the seed list arrives with source partitioning
         # (a file scan or range — already sized to the cluster), and the
         # AQE rebalance coalesces the ~100 B/row frontier to 64 MB
@@ -679,7 +625,6 @@ def run_crawl(
             stats={"seeded": True},
             rebalance=False,
         )
-        _tlog("seed-write", t0)
         start = 1
     machine = PhaseMachine()
     all_stats = []

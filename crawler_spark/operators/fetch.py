@@ -101,13 +101,10 @@ FETCH_SCHEMA = (
 )
 
 
-def _prepare(
-    selected: DataFrame,
-    num_partitions: int | None,
-    salt_buckets: int,
-) -> DataFrame:
+def _prepare(selected: DataFrame, salt_buckets: int) -> DataFrame:
     """Shared fetch-input prep: method column (A6), salted-by-host
-    repartition (skew split), fixed input projection."""
+    repartition (skew split) into spark.sql.shuffle.partitions tasks,
+    fixed input projection."""
     df = selected
     if "attempt" not in df.columns:
         df = df.withColumn("attempt", F.lit(1))
@@ -119,25 +116,21 @@ def _prepare(
         method = F.lit("GET")
     df = df.withColumn("method", method)
     df = df.withColumn("__salt", F.pmod(F.col("url_hash"), F.lit(salt_buckets)).cast("int"))
-    nparts = num_partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    df = df.repartition(int(nparts), "host", "__salt").drop("__salt")
+    nparts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    df = df.repartition(nparts, "host", "__salt").drop("__salt")
     return df.select(
         "url_canon", "url_hash", "host", "depth", "parent_url", "attempt",
         "priority", "method"
     )
 
 
-def fetch(
-    selected: DataFrame,
-    num_partitions: int | None = None,
-    salt_buckets: int = 8,
-) -> DataFrame:
+def fetch(selected: DataFrame, salt_buckets: int = 8) -> DataFrame:
     """Fetch the selected rows; salted-by-host repartition (skew split).
 
     A6 (http.py:410-466): ``method`` = POST for 'api'-type jobs, GET
     otherwise — the column rides the same UDF seam (a real HTTP
     fetcher dispatches requests.get/post on it)."""
-    return _prepare(selected, num_partitions, salt_buckets).mapInPandas(
+    return _prepare(selected, salt_buckets).mapInPandas(
         _fetch_batches, schema=FETCH_SCHEMA
     )
 
@@ -196,7 +189,6 @@ def _pa_fetch_schema():
 def fetch_write_plan(
     selected: DataFrame,
     dest: str,
-    num_partitions: int | None = None,
     salt_buckets: int = 8,
     rows_per_group: int = ROWS_PER_GROUP,
 ) -> DataFrame:
@@ -254,7 +246,7 @@ def fetch_write_plan(
             os.replace(tmp, final)
             yield pd.DataFrame({"file": [final], "rows": [rows]})
 
-    return _prepare(selected, num_partitions, salt_buckets).mapInPandas(
+    return _prepare(selected, salt_buckets).mapInPandas(
         write_partition, schema="file string, rows long"
     )
 

@@ -25,16 +25,15 @@ def get_spark(
     ``cores`` is the local[N] parallelism; shuffle partitions default
     to the core count (local mode has no network shuffle — more
     partitions than cores only adds scheduling overhead, fewer starves
-    the executors).
+    the executors). With ``cores="*"`` that is the CPUs in this
+    process's affinity set, the count the JVM's local[*] also sees.
 
-    ``master`` overrides the local[N] master string — the executor-
-    scaling benchmark passes ``local-cluster[N,C,M]``, the multi-JVM
-    single-machine analogue of a real cluster (separate executor
-    processes, netty shuffle, per-executor python worker pools); in a
-    real deployment this is where spark-submit's --master lands.
+    ``master`` overrides the local[N] master string, e.g.
+    ``local-cluster[N,C,M]`` (separate executor JVMs on one machine) or,
+    in a real deployment, wherever spark-submit's --master points.
     """
     if shuffle_partitions is None:
-        ncpu = os.cpu_count() or 8
+        ncpu = len(os.sched_getaffinity(0))
         shuffle_partitions = ncpu if cores == "*" else int(cores)
     builder = (
         SparkSession.builder.master(master or f"local[{cores}]")
@@ -54,12 +53,11 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # pin explicitly (it IS the Spark default, but the per-epoch
-        # fixed-cost decomposition in bench.py depends on it): python
-        # workers persist across tasks, so the Arrow UDF stages pay
-        # interpreter+import startup once per executor core, not once
-        # per task — with reuse off, each epoch's fetch/bloom stages
-        # would re-fork ~32 pythons and the "fixed per-epoch cost"
-        # measured by --scaling would be inflated by respawn time
+        # fixed cost depends on it): python workers persist across
+        # tasks, so the Arrow UDF stages pay interpreter+import startup
+        # once per executor core, not once per task — with reuse off,
+        # each epoch's fetch/bloom stages would re-fork one python per
+        # core and every epoch would pay the respawn time
         .config("spark.python.worker.reuse", "true")
     )
     for k, v in (extra_conf or {}).items():

@@ -1,9 +1,8 @@
 """The engine reads configuration from the environment in few, known
 places: behaviour must not be reachable only through an env var.
 
-Allowed: the ``SPARK_CRAWLER_*`` layer in config.py, the deployment
-setting ``SPARK_GRAFT_DRIVER_MEM`` in session.py, and the print-only
-``SPARK_GRAFT_TIMING`` in epoch.py.
+Allowed: the ``SPARK_CRAWLER_*`` layer in config.py and the deployment
+setting ``SPARK_GRAFT_DRIVER_MEM`` in session.py.
 """
 
 import re
@@ -14,7 +13,6 @@ ENV_READ = re.compile(r"os\.environ|getenv")
 ALLOWED = {
     "config.py": None,  # any name: the config layer owns the prefix
     "session.py": {"SPARK_GRAFT_DRIVER_MEM"},
-    "epoch.py": {"SPARK_GRAFT_TIMING"},
 }
 
 

@@ -1,11 +1,11 @@
-"""Executor-cluster smoke: the multi-JVM bench mode's moving parts.
+"""Executor-cluster smoke: the multi-JVM deployment's moving parts.
 
-bench.py's SPARK_GRAFT_SCALE_MODE=executors runs the frontier job on
-local-cluster[N,C,M] — separate executor JVMs whose python workers do
-NOT inherit the driver's sys.path (unlike local[N]). The package must
-reach them the way spark-submit --py-files would: via
-spark.executorEnv.PYTHONPATH. This test pins that wiring: a pandas UDF
-that imports crawler_spark runs on a real 2-executor local-cluster.
+``get_spark(master=...)`` can start a local-cluster[N,C,M] — separate
+executor JVMs whose python workers do NOT inherit the driver's sys.path
+(unlike local[N]). The package must reach them the way spark-submit
+--py-files would: via spark.executorEnv.PYTHONPATH. This test pins that
+wiring: a pandas UDF that imports crawler_spark runs on a real
+2-executor local-cluster.
 
 Runs in a SUBPROCESS: SparkSession.getOrCreate() silently ignores a
 different master when a session is already active, so an in-process

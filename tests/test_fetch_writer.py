@@ -5,8 +5,7 @@ pyarrow ParquetWriter instead of returning the payload to the JVM for
 DataFrameWriter.parquet. These tests pin its read-back against the
 plain ``fetch_op.fetch`` result written by Spark (identical rows,
 payload bytes included, and identical read schema), its overwrite and
-temp-file lifecycle, the zero-row fallback, and that the fetch-stage
-task-count knob never changes crawl state.
+temp-file lifecycle, and the zero-row fallback.
 """
 
 import os
@@ -139,46 +138,3 @@ def test_arrow_writer_empty_input(spark, tmp_path):
     assert df.count() == 0
     assert set(fetch_op.FETCH_COLS) == set(df.columns)
 
-
-def test_fetch_partitions_knob_parity(spark, tmp_path):
-    """EpochConfig.fetch_partitions changes only the task layout of the
-    fetch stage (file count == task count), never the result set —
-    the exec-mode balance lever (BASELINE.md r5) is semantics-free."""
-    seeds = fx.seeds_df(spark, 120, 10)
-    robots = fx.robots_rules_df(spark, 10)
-
-    stores = {}
-    for name, parts in (("default", None), ("fine", 24)):
-        cfg = EpochConfig(
-            num_buckets=8, epoch_seconds=10.0, epoch_budget=300,
-            fetch_partitions=parts,
-        )
-        stores[name] = SnapshotStore(spark, tmp_path / name)
-        run_crawl(
-            spark, stores[name], seeds, cfg, num_epochs=2,
-            robots_rules=robots,
-        )
-
-    def rowset(store, table):
-        return {
-            tuple(bytes(v) if isinstance(v, bytearray) else v for v in r)
-            for r in store.read_upto(table).collect()
-        }
-
-    for table in ("visited", "images", "failed", "metrics", "frontier"):
-        assert rowset(stores["default"], table) == rowset(
-            stores["fine"], table
-        ), table
-    # the knob actually took effect: one payload file per fetch task
-    fine_files = [
-        f
-        for f in os.listdir(tmp_path / "fine" / "fetched" / "epoch=1")
-        if f.endswith(".parquet")
-    ]
-    assert len(fine_files) <= 24  # empty tasks write no file
-    default_files = [
-        f
-        for f in os.listdir(tmp_path / "default" / "fetched" / "epoch=1")
-        if f.endswith(".parquet")
-    ]
-    assert len(fine_files) > len(default_files)

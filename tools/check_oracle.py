@@ -84,7 +84,7 @@ def main():
     import __spark_entry__ as entry
     from crawler_spark.session import get_spark
 
-    spark = get_spark(8, app_name="oracle_check", shuffle_partitions=8)
+    spark = get_spark(app_name="oracle_check")
     qs = entry.queries()
     oracles = entry.oracle_sql()
 

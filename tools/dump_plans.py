@@ -51,7 +51,7 @@ def main() -> None:
     from crawler_spark import queries as Q
     from crawler_spark.session import get_spark
 
-    spark = get_spark(8, app_name="dump_plans", shuffle_partitions=8)
+    spark = get_spark(app_name="dump_plans")
     out = ["# PLANS — physical plans of headline queries", ""]
     out.append(
         "Generated by `tools/dump_plans.py` at sf0.01. What to look for: "

@@ -37,6 +37,7 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -511,8 +512,11 @@ def run_epoch(
     for r in lrows + frows:
         bucket_row(r.host_bucket).update(r.asDict())
     mrows = sorted(merged.values(), key=lambda d: d["host_bucket"])
+    # from pandas, not the dicts: with Arrow on that builds the table in
+    # the JVM, where a list goes through a pickled Python RDD (4 tasks)
+    metrics = pd.DataFrame(mrows, columns=METRICS_SCHEMA.fieldNames())
     store.write_table(
-        epoch, "metrics", spark.createDataFrame(mrows, METRICS_SCHEMA)
+        epoch, "metrics", spark.createDataFrame(metrics, METRICS_SCHEMA)
     )
     stats = {
         "epoch": epoch,

@@ -4,6 +4,15 @@ Local-mode defaults mirror what a multi-executor submit would set via
 spark-submit conf: AQE on (runtime coalesce + skew-join splitting),
 Arrow enabled for every pandas UDF exchange, shuffle partitions sized
 to the core count rather than the 200 default.
+
+Python workers fork from ``crawler_spark.worker_daemon``
+(``spark.python.daemon.module``), which stops every task from
+re-reading pyspark.zip: ~0.2 s of CPU per task on CPython < 3.12 (see
+that module). The daemon starts before any task, so ``crawler_spark``
+must be importable where the workers run, as the UDFs already require:
+the working directory in local mode, ``PYTHONPATH``, an installed
+package, or ``spark.executorEnv.PYTHONPATH``. ``--py-files`` arrives
+with the first task, too late for the daemon.
 """
 
 from __future__ import annotations
@@ -59,6 +68,9 @@ def get_spark(
         # each epoch's fetch/bloom stages would re-fork one python per
         # core and every epoch would pay the respawn time
         .config("spark.python.worker.reuse", "true")
+        # workers fork from a daemon that stops each task re-reading
+        # pyspark.zip; it must import crawler_spark (module docstring)
+        .config("spark.python.daemon.module", "crawler_spark.worker_daemon")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

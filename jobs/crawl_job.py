@@ -10,6 +10,16 @@ Cluster deployment (the north-rule shape):
         jobs/crawl_job.py --snapshot-dir s3://bucket/crawl \
         --num-seeds 1000000 --num-hosts 50000 --epochs 100
 
+This path builds its own session, so its Python workers fork from
+Spark's own daemon: ``--py-files`` ships the package with the first
+task, after the daemon has started, and a daemon that cannot import
+``crawler_spark`` fails every Python stage. To use the engine's
+daemon (``crawler_spark/worker_daemon.py``, which saves each task
+~0.2 s of CPU re-reading pyspark.zip on CPython < 3.12), install the
+package on the executors and add
+``--conf spark.python.daemon.module=crawler_spark.worker_daemon``.
+``--local-cores`` uses ``get_spark``, which sets it.
+
 Local smoke:
 
     python jobs/crawl_job.py --snapshot-dir /tmp/crawl --num-seeds 1000 \

@@ -35,11 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import fixtures as fx
-
-FETCH_RESULT_FIELDS = (
-    "status int, attempt int, image_id string, bytes binary, w int, h int,"
-    " fmt string, caption string, phash long, ua_index int"
-)
+from ..state.snapshots import FETCHED_SCHEMA
 
 USER_AGENTS = 6  # reference ships 6 UA strings, http.py:30-37
 
@@ -93,14 +89,6 @@ def _fetch_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield out
 
 
-FETCH_SCHEMA = (
-    "url_canon string, url_hash long, host string, depth int, parent_url string,"
-    " attempt int, priority int, status int, image_id string, bytes binary,"
-    " w int, h int, fmt string, caption string, phash long, ua_index int,"
-    " method string"
-)
-
-
 def _prepare(selected: DataFrame, salt_buckets: int) -> DataFrame:
     """Shared fetch-input prep: method column (A6), salted-by-host
     repartition (skew split) into spark.sql.shuffle.partitions tasks,
@@ -131,7 +119,7 @@ def fetch(selected: DataFrame, salt_buckets: int = 8) -> DataFrame:
     otherwise — the column rides the same UDF seam (a real HTTP
     fetcher dispatches requests.get/post on it)."""
     return _prepare(selected, salt_buckets).mapInPandas(
-        _fetch_batches, schema=FETCH_SCHEMA
+        _fetch_batches, schema=FETCHED_SCHEMA
     )
 
 
@@ -155,35 +143,14 @@ def fetch(selected: DataFrame, salt_buckets: int = 8) -> DataFrame:
 # storage (HDFS/NFS/fuse) — the same contract Spark's file committer
 # has; an object-store deployment would swap os.replace for a
 # conditional PUT. ``write_payload`` is the driver-side half: it clears
-# the destination, runs the plan, sweeps temps of killed attempts and
-# writes the zero-row fallback.
-
-#: pandas/Arrow column order of a fetch-result batch (mirrors FETCH_SCHEMA)
-FETCH_COLS = [
-    "url_canon", "url_hash", "host", "depth", "parent_url", "attempt",
-    "priority", "status", "image_id", "bytes", "w", "h", "fmt", "caption",
-    "phash", "ua_index", "method",
-]
+# the destination, runs the plan and sweeps temps of killed attempts.
+# A zero-row epoch leaves an empty directory: the store reads it with
+# the declared FETCHED_SCHEMA, as zero rows.
 
 #: ~32 MB row groups at the ~5 KB/row payload profile: each writer keeps
 #: one group's buffers live, and 32 MB measured 14-19 % faster than the
 #: 128 MB default at 8 concurrent writers (BASELINE.md r5).
 ROWS_PER_GROUP = 6144
-
-
-def _pa_fetch_schema():
-    import pyarrow as pa
-
-    return pa.schema([
-        ("url_canon", pa.string()), ("url_hash", pa.int64()),
-        ("host", pa.string()), ("depth", pa.int32()),
-        ("parent_url", pa.string()), ("attempt", pa.int32()),
-        ("priority", pa.int32()), ("status", pa.int32()),
-        ("image_id", pa.string()), ("bytes", pa.binary()),
-        ("w", pa.int32()), ("h", pa.int32()), ("fmt", pa.string()),
-        ("caption", pa.string()), ("phash", pa.int64()),
-        ("ua_index", pa.int32()), ("method", pa.string()),
-    ])
 
 
 def fetch_write_plan(
@@ -204,17 +171,18 @@ def fetch_write_plan(
         import pyarrow as pa
         import pyarrow.parquet as pq
         from pyspark import TaskContext
+        from pyspark.sql.pandas.types import to_arrow_schema
 
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx else 0
         attempt = ctx.attemptNumber() if ctx else 0
-        schema = _pa_fetch_schema()
+        schema = to_arrow_schema(FETCHED_SCHEMA)
         writer = None
         tmp = final = None
         rows = 0
         for out in _fetch_batches(it):
             tbl = pa.Table.from_pandas(
-                out[FETCH_COLS], schema=schema, preserve_index=False
+                out[schema.names], schema=schema, preserve_index=False
             )
             if writer is None:
                 final = os.path.join(dest, f"part-{pid:05d}.parquet")
@@ -254,8 +222,8 @@ def fetch_write_plan(
 def write_payload(plan: DataFrame, dest: str) -> list:
     """Run a :func:`fetch_write_plan` built for ``dest`` with overwrite
     semantics: clear the directory right before the action, then, once
-    it has finished, delete temps that killed task attempts left behind
-    and write the zero-row fallback. Returns the file-manifest rows."""
+    it has finished, delete temps that killed task attempts left behind.
+    Returns the file-manifest rows (none for a zero-row epoch)."""
     import shutil
 
     dest_dir = Path(dest)
@@ -265,24 +233,4 @@ def write_payload(plan: DataFrame, dest: str) -> list:
     files = plan.collect()
     for tmp in dest_dir.glob(".part-*.inprogress"):
         tmp.unlink()
-    if not files:  # zero-row epoch: no task wrote a file
-        write_empty_payload(dest)
     return files
-
-
-def write_empty_payload(dest: str) -> None:
-    """Driver-side fallback for a zero-row epoch: tasks with no rows
-    write no file, but a parquet directory with NO files cannot even
-    be schema-inferred by the scan — so materialize one empty
-    schema-carrying file (what Spark's own parquet commit does)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    schema = _pa_fetch_schema()
-    pq.write_table(
-        pa.Table.from_arrays(
-            [pa.array([], type=f.type) for f in schema], schema=schema
-        ),
-        str(Path(dest) / "part-empty.parquet"),
-        compression="none",
-    )

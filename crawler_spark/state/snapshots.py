@@ -16,6 +16,14 @@ projections of ``fetched`` (see ``read_upto``). Resume = read the
 manifest's latest committed epoch and load partitions epoch<=E
 (partition pruning keeps this a metadata operation + pruned scan).
 
+``SCHEMAS`` is the one declaration of every table's columns. Reads use
+it (plus ``epoch``, parsed from the path) instead of inferring a schema
+from parquet footers, so building a read starts no Spark job and an
+epoch directory without files reads as zero rows. A writer that adds a
+column must add it to ``SCHEMAS`` too: a declared read silently drops
+a column the declaration lacks (tests/test_recrawl.py checks every
+written file against its table's declaration).
+
 This is the Iceberg-snapshot design from SURVEY §1.3 with a plain
 parquet fallback since the sandbox has no Iceberg runtime jar; the API
 (append / read_upto / latest_epoch) is kept thin so an Iceberg backend
@@ -44,15 +52,6 @@ FRONTIER_SCHEMA = T.StructType([
     T.StructField("parent_url", T.StringType()),
 ])
 
-VISITED_SCHEMA = T.StructType([
-    T.StructField("url_hash", T.LongType()),
-    T.StructField("url_canon", T.StringType()),
-    T.StructField("host", T.StringType()),
-    T.StructField("status", T.IntegerType()),
-    T.StructField("depth", T.IntegerType()),
-    T.StructField("priority", T.IntegerType()),
-])
-
 FAILED_SCHEMA = T.StructType([
     T.StructField("url_hash", T.LongType()),
     T.StructField("url_canon", T.StringType()),
@@ -61,19 +60,6 @@ FAILED_SCHEMA = T.StructType([
     T.StructField("parent_url", T.StringType()),
     T.StructField("attempts", T.IntegerType()),
     T.StructField("last_status", T.IntegerType()),
-])
-
-IMAGES_SCHEMA = T.StructType([
-    T.StructField("image_id", T.StringType()),
-    T.StructField("url_canon", T.StringType()),
-    T.StructField("url_hash", T.LongType()),
-    T.StructField("host", T.StringType()),
-    T.StructField("bytes", T.BinaryType()),
-    T.StructField("w", T.IntegerType()),
-    T.StructField("h", T.IntegerType()),
-    T.StructField("fmt", T.StringType()),
-    T.StructField("caption", T.StringType()),
-    T.StructField("phash", T.LongType()),
 ])
 
 METRICS_SCHEMA = T.StructType([
@@ -113,6 +99,20 @@ FETCHED_SCHEMA = T.StructType(
     ]
 )
 
+
+def _fetched_projection(*names: str) -> T.StructType:
+    return T.StructType([FETCHED_SCHEMA[n] for n in names])
+
+
+# the virtual tables (see read_upto): pruned projections of fetched
+VISITED_SCHEMA = _fetched_projection(
+    "url_hash", "url_canon", "host", "status", "depth", "priority"
+)
+IMAGES_SCHEMA = _fetched_projection(
+    "image_id", "url_canon", "url_hash", "host", "bytes", "w", "h", "fmt",
+    "caption", "phash",
+)
+
 # recrawl tombstones (F14/cuckoo path): a url_hash committed at epoch T
 # deletes that URL's visited rows with epoch <= T, so the next epoch
 # re-admits it. Append-only like the other deltas — a re-fetch at
@@ -128,6 +128,8 @@ SCHEMAS = {
     "metrics": METRICS_SCHEMA,
     "recrawl": RECRAWL_SCHEMA,
 }
+# the hive partition column, parsed from the epoch=N directory name
+EPOCH_FIELD = T.StructField("epoch", T.IntegerType())
 # tables whose epoch=N dir is the COMPLETE state (not a delta)
 FULL_STATE_TABLES = {"failed"}
 # tables that are pruned projections of the write-once fetched payload
@@ -206,16 +208,13 @@ class SnapshotStore:
 
     def read_table(self, epoch: int, name: str) -> DataFrame:
         """Read back one (possibly not-yet-committed) epoch partition."""
-        path = self.table_path(epoch, name)
-        return self.spark.read.option(
-            "basePath", str(self._table_root(name))
-        ).parquet(str(path))
+        return self._scan(name, [epoch])
 
     def commit_epoch(self, epoch: int, names: list[str], stats: dict | None = None) -> None:
         """Atomically commit previously written tables for `epoch`."""
         manifest = self._read_manifest()
         manifest["epochs"][str(epoch)] = {
-            "tables": {n: {"path": str(self.root / n / f"epoch={epoch}")} for n in names},
+            "tables": {n: {"path": str(self.table_path(epoch, n))} for n in names},
             "stats": stats or {},
             "committed_at_ms": int(time.time() * 1000),
         }
@@ -240,9 +239,6 @@ class SnapshotStore:
 
     # -- read ----------------------------------------------------------------
 
-    def _table_root(self, table: str) -> Path:
-        return self.root / table
-
     def _committed_epochs(self, manifest: dict, table: str, epoch: int) -> list[int]:
         return sorted(
             e
@@ -250,14 +246,19 @@ class SnapshotStore:
             if e <= epoch and table in manifest["epochs"][str(e)]["tables"]
         )
 
-    def _read_epochs(self, table: str, epochs: list[int]) -> DataFrame | None:
-        paths = [str(self._table_root(table) / f"epoch={e}") for e in epochs]
-        paths = [p for p in paths if Path(p).exists()]
-        if not paths:
-            return None
-        return self.spark.read.option(
-            "basePath", str(self._table_root(table))
-        ).parquet(*paths)
+    def _scan(self, table: str, epochs: list[int]) -> DataFrame:
+        """Read ``table``'s epoch partitions with its declared schema
+        plus ``epoch`` (taken from the path). Declared, not inferred: no
+        Spark job reads a footer, and a partition without files — a
+        zero-row epoch — reads as zero rows, as does an empty list."""
+        reader = self.spark.read.schema(
+            T.StructType(SCHEMAS[table].fields + [EPOCH_FIELD])
+        )
+        paths = [self.table_path(e, table) for e in epochs]
+        paths = [str(p) for p in paths if p.exists()]
+        if paths:  # a basePath that does not exist is an error
+            reader = reader.option("basePath", str(self.root / table))
+        return reader.parquet(*paths)
 
     def read_upto(
         self,
@@ -286,24 +287,20 @@ class SnapshotStore:
             epoch = self.latest_epoch()
         manifest = self._read_manifest()
         if table in VIRTUAL_FROM_FETCHED:
-            out = self._read_epochs(
+            out = self._scan(
                 "fetched", self._committed_epochs(manifest, "fetched", epoch)
+            ).filter(F.col("status") == 200).select(
+                *SCHEMAS[table].names, "epoch"
             )
-            if out is not None:
-                out = out.filter(F.col("status") == 200).select(
-                    *[f.name for f in SCHEMAS[table].fields], "epoch"
-                )
         else:
             own = self._committed_epochs(manifest, table, epoch)
             if table in FULL_STATE_TABLES:
                 own = own[-1:]
-            out = self._read_epochs(table, own)
-        if out is None:
-            return self.spark.createDataFrame([], SCHEMAS[table])
+            out = self._scan(table, own)
         if table == "visited" and not include_recrawled:
             rc = self._committed_epochs(manifest, "recrawl", epoch)
             if rc:
-                tomb = self._read_epochs("recrawl", rc).select(
+                tomb = self._scan("recrawl", rc).select(
                     F.col("url_hash").alias("__rc_hash"),
                     F.col("epoch").alias("__rc_epoch"),
                 )
@@ -334,7 +331,7 @@ class SnapshotStore:
             rc = [e for e in rc if e > since]
         if not rc:
             return np.zeros(0, dtype=np.int64)
-        rows = self._read_epochs("recrawl", rc).select("url_hash").collect()
+        rows = self._scan("recrawl", rc).select("url_hash").collect()
         return np.array([r[0] for r in rows], dtype=np.int64)
 
     # -- persisted seen-filter (incremental F5 maintenance) -------------------
@@ -347,13 +344,15 @@ class SnapshotStore:
         tombstone subtraction (the filter replays tombstones itself as
         counting deletes)."""
         manifest = self._read_manifest()
-        fetched = self._read_epochs("fetched", [
+        epochs = [
             e for e in self._committed_epochs(manifest, "fetched", upto)
             if e > since
-        ])
-        if fetched is None:
+        ]
+        if not epochs:
             return None  # nothing in range — caller skips the build job
-        return fetched.filter(F.col("status") == 200).select("url_hash")
+        return self._scan("fetched", epochs).filter(
+            F.col("status") == 200
+        ).select("url_hash")
 
     def save_seen_filter(self, upto: int, kind: str, blob: bytes, meta: dict) -> None:
         """Persist the engaged seen filter's raw bits as a store

@@ -2,6 +2,7 @@
 distributed build == local build, anti-join equivalence."""
 
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -100,6 +101,16 @@ def test_auto_bloom_engages_and_is_exact(spark, tmp_path):
         }
     assert results["auto_on"] == results["exact"]
     assert len(results["auto_on"]) > 120  # the crawl actually grew
+
+
+@pytest.mark.parametrize("bad", ["false", "Auto"])
+def test_bad_use_bloom_fails_loudly(bad):
+    """A truthy string other than 'auto' must not silently engage the
+    Bloom on every epoch (bool("false") is True)."""
+    from crawler_spark.epoch import EpochConfig
+
+    with pytest.raises(ValueError, match="use_bloom"):
+        EpochConfig(use_bloom=bad)
 
 
 def test_stats_sum_reads_manifest(spark, tmp_path):

@@ -4,8 +4,8 @@ The fused fetch+write path streams each task's batches straight into a
 pyarrow ParquetWriter instead of returning the payload to the JVM for
 DataFrameWriter.parquet. These tests pin its read-back against the
 plain ``fetch_op.fetch`` result written by Spark (identical rows,
-payload bytes included, and identical read schema), its overwrite and
-temp-file lifecycle, and the zero-row fallback.
+payload bytes included, and identical read schema), and its overwrite
+and temp-file lifecycle.
 """
 
 import os
@@ -13,7 +13,7 @@ import os
 from crawler_spark import fixtures as fx
 from crawler_spark.epoch import EpochConfig, run_crawl, run_epoch
 from crawler_spark.operators import fetch as fetch_op
-from crawler_spark.state.snapshots import SnapshotStore
+from crawler_spark.state.snapshots import FETCHED_SCHEMA, SnapshotStore
 
 
 def _selected(spark, n=600):
@@ -111,7 +111,7 @@ def test_write_payload_sweeps_killed_attempt_temps(spark, tmp_path):
         leaky, schema="file string, rows long"
     )
     assert fetch_op.write_payload(plan, str(dest)) == []
-    assert os.listdir(dest) == ["part-empty.parquet"]
+    assert os.listdir(dest) == []
 
 
 def test_run_epoch_leaves_no_inprogress(spark, tmp_path):
@@ -127,14 +127,14 @@ def test_run_epoch_leaves_no_inprogress(spark, tmp_path):
 
 
 def test_arrow_writer_empty_input(spark, tmp_path):
-    """Zero-row epoch: no task writes a file; the driver-side fallback
-    materializes a schema-carrying empty parquet so the scan works."""
+    """Zero-row epoch: no task writes a file, and the declared-schema
+    read of the empty directory has zero rows and every column."""
     dest = tmp_path / "empty"
     plan = fetch_op.fetch_write_plan(
         _selected(spark, n=0), str(dest), salt_buckets=2
     )
     assert fetch_op.write_payload(plan, str(dest)) == []
-    df = spark.read.parquet(str(dest))
+    df = spark.read.schema(FETCHED_SCHEMA).parquet(str(dest))
     assert df.count() == 0
-    assert set(fetch_op.FETCH_COLS) == set(df.columns)
+    assert df.columns == FETCHED_SCHEMA.names
 

@@ -4,14 +4,18 @@ original fetch in the deterministic world — recrawl ≡ fresh crawl of
 those URLs. Also exercises the cuckoo filter end-to-end inside
 run_epoch (tombstones present + pre-filter engaged → Bloom is swapped
 for a cuckoo built on the raw visited projection with the tombstones
-replayed as counting deletes)."""
+replayed as counting deletes). The same store pins the read contract:
+building its reads starts no Spark job, and every file it wrote has
+its table's declared schema."""
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from crawler_spark import fixtures as fx
 from crawler_spark.epoch import EpochConfig, recrawl, run_crawl, run_epoch
-from crawler_spark.state.snapshots import SnapshotStore
+from crawler_spark.state.snapshots import SCHEMAS, SnapshotStore
 
 NUM_HOSTS = 6
 N_SEEDS = 30
@@ -122,3 +126,40 @@ def test_lineage_matches_recount(recrawled, spark, check_lineage):
     ).count() == 0
     for ep in (exhausted, e):
         check_lineage(store, ep, CFG["num_buckets"], robots)
+
+
+def _job_ids(spark):
+    """Ids of every job the status tracker knows, once the listener bus
+    has delivered all events posted so far."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(sc.statusTracker().getJobIdsForGroup(None))
+
+
+def test_store_reads_start_no_job(recrawled, spark):
+    """Reads use the declared SCHEMAS: building one reads no parquet
+    footer, so it starts no Spark job (an inferred read starts one)."""
+    store, info, stats, hashes, originals, gone, e, _ = recrawled
+    before = _job_ids(spark)
+    reads = [
+        store.read_upto(t) for t in ("frontier", "failed", "visited", "images")
+    ]
+    reads.append(store.read_table(e, "fetched"))
+    reads.append(store.visited_delta_keys(0, e))
+    assert _job_ids(spark) - before == set()
+    assert all(r is not None for r in reads)
+
+
+def test_written_files_match_declared_schemas(recrawled):
+    """Every part file's footer has exactly its table's declared column
+    names and types: a declared read silently drops a column that the
+    declaration lacks, so a writer change must show up here."""
+    store = recrawled[0]
+    checked = set()
+    for table, schema in SCHEMAS.items():
+        want = [(f.name, f.type) for f in to_arrow_schema(schema)]
+        for part in store.root.glob(f"{table}/epoch=*/part-*.parquet"):
+            got = [(f.name, f.type) for f in pq.read_schema(part)]
+            assert got == want, part
+            checked.add(table)
+    assert checked == {"frontier", "failed", "fetched", "metrics", "recrawl"}

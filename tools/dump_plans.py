@@ -8,10 +8,13 @@ Usage: python tools/dump_plans.py [sf_dir]
 from __future__ import annotations
 
 import io
+import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+PLANS = os.path.join(REPO, "PLANS.md")
 
 HEADLINERS = [
     "f1_canonicalize",
@@ -73,7 +76,7 @@ def main() -> None:
     # from the first appended marker onward and re-attach it
     tail = ""
     try:
-        old = open("/root/repo/PLANS.md").read()
+        old = open(PLANS).read()
         idxs = [
             i
             for i in (
@@ -86,7 +89,7 @@ def main() -> None:
             tail = "\n" + old[min(idxs):]
     except FileNotFoundError:
         pass
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(PLANS, "w") as f:
         f.write("\n".join(out) + tail)
     print("wrote PLANS.md" + (" (+ preserved appended evidence)" if tail else ""))
 
